@@ -216,7 +216,12 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     cache_dir = (
         Path(__file__).resolve().parent / ".cache" / "bm25_index" / fp
     )
-    if not (cache_dir / "postings" / "_SUCCESS").exists():
+    # write_index writes postings, then doclens: a kill between the two
+    # leaves complete postings beside partial doclens, so probe both
+    if not all(
+        (cache_dir / part / "_SUCCESS").exists()
+        for part in ("postings", "doclens")
+    ):
         bm25_ops.write_index(
             load_table(spark, sf_dir, "documents"), str(cache_dir)
         )

@@ -9,10 +9,11 @@ horizontally and update incrementally:
     doclens(doc_id, dl)               — array size per doc, no shuffle
     termstats(term, df, idf)          — groupBy term
 
-Scoring a *batch* of queries is a join pipeline: query terms (tiny,
-broadcast) ⋈ termstats ⋈ postings ⋈ doclens → per-(query, doc) sum. The
-only large shuffle is the final groupBy(query_id, doc_id), proportional to
-candidate matches, not the corpus.
+Scoring a *batch* of queries resolves the query side on the driver
+(terms and per-query qtf), filters postings to the batch terms at the
+scan, and joins doclens → per-(query, doc) sum. The only large shuffle is
+the final groupBy(query_id, doc_id), proportional to candidate matches,
+not the corpus.
 
 IDF variant: Lucene/Elasticsearch BM25 — ``ln(1 + (N - df + .5)/(df + .5))``
 — i.e. the formula the reference's Elasticsearch backend uses
@@ -29,7 +30,15 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
+from rag_database_spark.functions.literal import isin, json_literal
 from rag_database_spark.functions.text import tokenize
 
 K1 = 1.5
@@ -81,6 +90,19 @@ def corpus_stats(doclens: DataFrame) -> DataFrame:
     )
 
 
+def qtf_by_term(rows) -> dict[str, dict]:
+    """term → {query_id: qtf} from (query_id, terms) pairs. Query terms
+    keep multiplicity (rank_bm25 iterates duplicate query tokens,
+    bm25_store.py:217), and rows sharing a query_id add up, as a
+    groupBy(query_id, term) count would."""
+    qtf: dict[str, dict] = {}
+    for qid, terms in rows:
+        for t in terms or ():
+            per_q = qtf.setdefault(t, {})
+            per_q[qid] = per_q.get(qid, 0) + 1
+    return qtf
+
+
 def score_queries(
     queries: DataFrame,
     postings: DataFrame,
@@ -92,55 +114,73 @@ def score_queries(
 ) -> DataFrame:
     """BM25 score for every (query, matching doc) pair.
 
-    Returns (query_id, doc_id, score). Query terms keep multiplicity via a
-    qtf multiplier (rank_bm25 iterates duplicate query tokens,
-    bm25_store.py:217). The queries side is broadcast — postings never
-    shuffles for the join, only for the final (query_id, doc_id) rollup.
-
-    Pure-lazy single-pass shape (r18; replaces the r17 eager
-    localCheckpoint folds): postings are scanned exactly ONCE — the
-    per-term document frequency that used to be a groupBy(term)
-    aggregate joined back onto a second postings scan (or a checkpoint
-    of the first) is now a ``count over (partition by term)`` window on
-    the matched stream, and idf is computed inline per row from it.
-    The 1-row corpus stats frame broadcasts once carrying BOTH n_docs
-    and avgdl (it fed two separate consumers before). The plan has no
-    eager jobs and no RDD leaves, so the entry-level prepared-plan
-    cache can legitimately memoize it — every action still recomputes
-    everything from the parquet inputs.
-
-    The window exchanges only the MATCHED stream (query-term postings,
-    not the corpus-wide table) keyed on term; hot query terms buffer in
-    one spillable window partition — the same rows the old termstats
-    aggregate funneled through one partition. idf per row is the exact
-    expression ``build_termstats`` computed per term: same double
-    inputs, same double result.
-    """
-    stats = corpus_stats(doclens)
-
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokenize(F.col(query_text_col))).alias("term"),
-        )
-        .groupBy("query_id", "term")
-        .agg(F.count("*").alias("qtf"))
+    Returns (query_id, doc_id, score). The query side is resolved on the
+    driver at build time: one collect of the tokenized queries (the same
+    ``tokenize`` expression the postings were built with), folded by
+    ``qtf_by_term`` and scored by ``score_terms``."""
+    rows = queries.select(
+        query_id_col, tokenize(F.col(query_text_col)).alias("terms")
+    ).collect()
+    return score_terms(
+        qtf_by_term(rows),
+        postings,
+        doclens,
+        queries.schema[query_id_col].dataType,
+        k1,
+        b,
     )
 
-    # Semi-join postings down to query terms FIRST (broadcast the tiny
-    # term set), then derive df/idf from the survivors only. The full
-    # vocabulary is never aggregated or broadcast — at 100 TB the
-    # vocabulary is 10^8+ terms, but a query workload touches a few
-    # hundred, so the matched stream is query-term-bounded.
-    qterm_set = qterms.select("term").distinct()
-    matched_postings = postings.join(F.broadcast(qterm_set), "term")
 
+def score_terms(
+    qtf: dict[str, dict],
+    postings: DataFrame,
+    doclens: DataFrame,
+    query_id_type: DataType = LongType(),
+    k1: float = K1,
+    b: float = B,
+) -> DataFrame:
+    """BM25 scores from a driver-resolved query side ``qtf``
+    (term → {query_id: qtf}, see ``qtf_by_term``).
+
+    Plan: one postings scan filtered by ``term IN (batch terms)`` — the
+    filter reaches the Parquet scan, so the corpus-wide vocabulary is
+    never aggregated. The per-term document frequency is a
+    ``count over (partition by term)`` window on the matched stream
+    (the only term-keyed exchange, query-term-bounded), idf is computed
+    inline per row from it, and ``inline(map[term])`` expands each
+    posting into its (query_id, qtf) rows from a literal map built on
+    the driver — no query frame is scanned, shuffled or broadcast. The
+    IN list and the map are each parsed on the JVM from one string
+    (``functions.literal``), so building the plan takes a constant
+    number of JVM calls at any batch size; a map lookup scans the
+    batch's distinct terms. The
+    1-row corpus stats frame broadcasts once carrying n_docs and avgdl;
+    the only other shuffle is the final (query_id, doc_id) rollup. idf
+    is the exact per-term expression ``build_termstats`` computes. The
+    plan has no RDD leaves, so the entry-level prepared-plan cache may
+    memoize it; every action still recomputes from the Parquet inputs."""
+    if not qtf:
+        spark = postings.sparkSession
+        return spark.createDataFrame(
+            [],
+            StructType([
+                StructField("query_id", query_id_type),
+                StructField("doc_id", postings.schema["doc_id"].dataType),
+                StructField("score", DoubleType()),
+            ]),
+        )
+    terms = sorted(qtf)
+    by_term = json_literal(
+        {t: [{"query_id": q, "qtf": n} for q, n in qtf[t].items()] for t in terms},
+        f"map<string, array<struct<query_id: {query_id_type.simpleString()}, "
+        "qtf: bigint>>>",
+    )
+    stats = corpus_stats(doclens)
     wterm = Window.partitionBy("term")
     matched = (
-        matched_postings.withColumn(
-            "df", F.count(F.lit(1)).over(wterm)
-        )
-        .join(F.broadcast(qterms), "term")
+        postings.filter(isin("term", terms))
+        .withColumn("df", F.count(F.lit(1)).over(wterm))
+        .select("doc_id", "tf", "df", F.inline(by_term[F.col("term")]))
         .join(doclens, "doc_id")
         .crossJoin(F.broadcast(stats))
     )

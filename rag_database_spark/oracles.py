@@ -1887,7 +1887,7 @@ FROM edges GROUP BY relation_type
 
 
 def _colpali_ctes(fetch: int | None = None) -> str:
-    """MaxSim CTEs, mirroring the engine's two-stage plan
+    """MaxSim CTEs, mirroring the engine's prefetch + rescore
     (similarity.maxsim_scores_pruned): prefetch ``fetch`` candidate
     pages per query by cosine over avg-pooled vectors, then exact
     token×patch MaxSim on the candidate pairs only. ``fetch=None``
@@ -1898,8 +1898,8 @@ def _colpali_ctes(fetch: int | None = None) -> str:
     (tests/test_similarity.py). The prefetch cosine is rounded to
     PREFETCH_ROUND_DP decimals before ranking, mirroring the engine,
     so candidate membership at the fetch boundary cannot diverge
-    between DuckDB's avg()+list_dot_product and Spark's fold-sum
-    pooling + numpy GEMM."""
+    between DuckDB's avg()+list_dot_product and the engine's
+    sequential fold-sum pooling + numpy GEMM."""
     from rag_database_spark.operators.fusion import FETCH_MULTIPLIER
     from rag_database_spark.operators.similarity import PREFETCH_ROUND_DP
     from rag_database_spark.workload import (

@@ -95,11 +95,13 @@ def multivector_pages(embeddings: DataFrame) -> DataFrame:
     grouped = embeddings.withColumn(
         "page_id", F.floor(F.col("vec_id") / PAGE_GROUP).cast("long")
     )
-    # eager localCheckpoint (r17): consumers (maxsim prefetch + exact
-    # rescore join) reference the page table twice, re-running the
-    # collect_list aggregation per reference. Fixture-sized, rebuilt
-    # per call. A production multi-vector table is a stored table, so
-    # this fold lives in the workload glue, not the operator.
+    # eager localCheckpoint: the page table stands in for a stored
+    # table, built once and then read by every query batch that is
+    # given it (a benchmark or server reuses it across batches); a
+    # lazy frame would re-run the embeddings shuffle and collect_list
+    # fold in each of them. Fixture-sized, rebuilt per call. A
+    # production multi-vector table is a stored table, so this fold
+    # lives in the workload glue, not the operator.
     return _collect_patches(grouped, "page_id").localCheckpoint()
 
 
@@ -113,9 +115,7 @@ def query_patches_df(spark: SparkSession, embeddings: DataFrame) -> DataFrame:
         (embeddings["vec_id"] >= q["query_vec_id"])
         & (embeddings["vec_id"] < q["query_vec_id"] + QUERY_TOKENS),
     ).select("query_id", "vec_id", "embedding")
-    # same fold as multivector_pages: referenced by the pooled
-    # prefetch AND the collected rescore side
-    return _collect_patches(joined, "query_id").localCheckpoint()
+    return _collect_patches(joined, "query_id")
 
 
 def chunk_page_map(embeddings: DataFrame) -> DataFrame:

@@ -35,7 +35,9 @@ def _tokenize(text):
     return out
 
 
-def _expected_scores():
+def _expected_scores(queries=QUERIES):
+    """Rows sharing a query_id score as one query over all their
+    tokens, each repeated token counting again (qtf)."""
     corpus = {d: _tokenize(t) for d, t in DOCS}
     n = len(corpus)
     avgdl = sum(len(v) for v in corpus.values()) / n
@@ -43,11 +45,14 @@ def _expected_scores():
     for toks in corpus.values():
         for t in set(toks):
             df[t] = df.get(t, 0) + 1
+    qtoks = {}
+    for qid, qtext in queries:
+        qtoks.setdefault(qid, []).extend(_tokenize(qtext))
     exp = {}
-    for qid, qtext in QUERIES:
+    for qid, toks_q in qtoks.items():
         for doc_id, toks in corpus.items():
             s = 0.0
-            for qt in _tokenize(qtext):
+            for qt in toks_q:
                 tf = toks.count(qt)
                 if tf == 0:
                     continue
@@ -74,6 +79,42 @@ def test_bm25_matches_hand_computation(scored):
     assert set(scored) == set(exp)
     for key, val in exp.items():
         assert scored[key] == pytest.approx(val, rel=1e-12), key
+
+
+EDGE_QUERIES = [
+    (20, "hash hash join"),  # repeated term: qtf 2
+    (21, "sort data"),  # two rows with one query_id add up
+    (21, "data scan"),
+    (22, "the of and"),  # stopwords only: no terms, no rows
+    (23, "zzzunseen hash"),  # a term absent from postings
+]
+
+
+def test_bm25_edge_queries_match_hand_computation(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        EDGE_QUERIES, "query_id long, query_text string"
+    )
+    rows = bm25_ops.score_queries(
+        queries, bm25_ops.build_postings(docs), bm25_ops.build_doclens(docs)
+    ).collect()
+    got = {(r["query_id"], r["doc_id"]): r["score"] for r in rows}
+    assert len(got) == len(rows)
+    exp = _expected_scores(EDGE_QUERIES)
+    assert set(got) == set(exp)
+    assert not any(q == 22 for q, _ in got)
+    for key, val in exp.items():
+        assert got[key] == pytest.approx(val, rel=1e-12), key
+
+
+def test_bm25_empty_batch(spark):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame([], "query_id long, query_text string")
+    scored = bm25_ops.score_queries(
+        queries, bm25_ops.build_postings(docs), bm25_ops.build_doclens(docs)
+    )
+    assert scored.columns == ["query_id", "doc_id", "score"]
+    assert scored.collect() == []
 
 
 def test_empty_doc_counts_toward_stats(spark):

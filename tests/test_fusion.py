@@ -110,3 +110,69 @@ def test_hybrid_absent_leg_contributes_zero(spark):
     assert first["rrf_score"] == pytest.approx(
         round(0.5 / (60 + first["dense_rank"]), 6)
     )
+
+
+def test_hybrid3_missing_dense_and_colpali_inputs_contribute_zero(spark):
+    """One query names a vec_id with no embedding row, another has no
+    query-patch row: each still fuses, its missing leg contributes 0 and
+    its dense ranks follow a NumPy cosine ranking of the corpus."""
+    import numpy as np
+
+    from rag_database_spark.operators.hybrid import hybrid_search3
+    from rag_database_spark.workload import _collect_patches
+
+    rng = np.random.default_rng(4)
+    n, page_group, doc_pages = 32, 4, 2
+    vecs = rng.normal(size=(n, 3)).round(3)
+    words = ["alpha", "beta", "gamma", "delta"]
+    docs = spark.createDataFrame(
+        [(i, f"{words[i % 4]} {words[(i // 4) % 4]} text") for i in range(n)],
+        "doc_id long, text string",
+    )
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    pages = _collect_patches(
+        emb.withColumn("page_id", (F.col("vec_id") / page_group).cast("long")),
+        "page_id",
+    )
+    chunk_pages = emb.select(
+        F.col("vec_id").alias("id"),
+        (F.col("vec_id") / (page_group * doc_pages)).cast("long").alias(
+            "document_id"
+        ),
+        (F.col("vec_id") / page_group).cast("long").alias("page_number"),
+    )
+    queries = spark.createDataFrame(
+        [(1, "alpha beta", 999), (2, "gamma delta", 5)],
+        "query_id long, query_text string, query_vec_id long",
+    )
+    qpatches = spark.createDataFrame(
+        [(1, vecs[:2].tolist())], "query_id long, patches array<array<double>>"
+    )
+    rows = hybrid_search3(
+        queries, docs, emb, qpatches, pages, chunk_pages, doc_pages, limit=5
+    ).collect()
+    by_q = {q: [r for r in rows if r["query_id"] == q] for q in (1, 2)}
+    assert by_q[1] and by_q[2]
+    assert all(r["dense_rank"] is None for r in by_q[1])
+    assert any(r["colpali_rank"] is not None for r in by_q[1])
+    assert all(r["colpali_rank"] is None for r in by_q[2])
+    assert any(r["dense_rank"] is not None for r in by_q[2])
+    weights = {"bm25": 0.3, "dense": 0.5, "colpali": 0.2}
+    for r in rows:
+        present = sum(
+            w / (60 + r[f"{m}_rank"])
+            for m, w in weights.items()
+            if r[f"{m}_rank"] is not None
+        )
+        assert r["rrf_score"] == pytest.approx(round(present, 6), abs=1e-9)
+    # dense ranks of query 2: NumPy cosine against its query vector
+    f32 = vecs.astype(np.float32).astype(np.float64)
+    unit = f32 / np.linalg.norm(f32, axis=1, keepdims=True)
+    cos = unit @ unit[5]
+    order = sorted(range(n), key=lambda i: (-cos[i], i))
+    for r in by_q[2]:
+        if r["dense_rank"] is not None:
+            assert order.index(r["id"]) + 1 == r["dense_rank"]

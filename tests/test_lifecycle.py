@@ -67,13 +67,14 @@ def test_rerank_scores_overlap(spark):
 
 
 def test_rerank_candidates_materialized_once(spark):
-    """r17 optimization: the candidate pair list feeds both the
-    broadcast id filter and the streamed join side; it is folded into
-    one eager localCheckpoint so the upstream candidate pipeline (BM25
-    scoring + top-k in rerank_topk) executes once, not twice. The
-    physical plan must therefore read the candidates from a
-    checkpointed RDD scan, and the un-checkpointed candidate lineage
-    must not appear."""
+    """The candidate pair list is consumed once: in ``rerank_topk`` its
+    lineage is BM25 scoring + a window top-k, and re-deriving it for a
+    second consumer would run that pipeline twice per action. A marker
+    filter on the candidate lineage must therefore occur exactly once in
+    the executed plan (it renders as ``(id#N >= 0)``; an inferred
+    ``doc_id >= 0`` on the documents side is not the candidate column)."""
+    import re
+
     queries = spark.createDataFrame(
         [(1, "fast hash join")], "query_id long, query_text string"
     )
@@ -88,26 +89,10 @@ def test_rerank_candidates_materialized_once(spark):
         cands, queries, docs, limit=2, id_col="doc_id"
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # both consumers read the checkpoint (ExistingRDD scan)
-    assert "ExistingRDD" in plan
-    # r17 ADVICE: assert the DEDUP, not just that a checkpoint exists —
-    # the marker filter on the candidate lineage must be hidden behind
-    # the checkpoint (zero occurrences in the executed plan; it renders
-    # as `(id#NL >= 0)`); if the candidates were re-derived for either
-    # consumer it would reappear. An inferred `doc_id >= 0` on the
-    # DOCUMENTS side is fine (LogicalRDD preserves constraints and the
-    # join propagates them) — only the candidate column counts.
-    assert not any(
-        ">= 0" in line and "(id#" in line for line in plan.splitlines()
-    )
-    # and both consumers scan the checkpointed candidates (the queries
-    # fixture is also an ExistingRDD, so match the candidate schema)
-    cand_scans = [
-        line
-        for line in plan.splitlines()
-        if "Scan ExistingRDD[query_id#" in line and ",id#" in line
+    markers = [
+        line for line in plan.splitlines()
+        if re.search(r"\(id#\d+L? >= 0\)", line) and "Filter" in line
     ]
-    assert len(cand_scans) == 2
-    # values unchanged by the fold
+    assert len(markers) == 1, plan
     rows = out.orderBy("rank").collect()
     assert [r["id"] for r in rows] == [10, 20]

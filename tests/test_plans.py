@@ -66,19 +66,29 @@ def test_quality_scan_stays_in_codegen(spark):
     assert "WholeStageCodegen" in plan_of(df, "codegen")
 
 
-def test_bm25_query_semijoin_before_vocab_agg(spark):
-    """The BM25 leg must semi-join postings to the broadcast query
-    terms BEFORE any corpus-wide aggregation (the round-1 scale fix):
-    the scoring plan carries a broadcast join, and the scan of the
-    postings side is filtered, not a full-vocabulary rollup."""
+def test_bm25_query_semijoin_before_vocab_agg(spark, tmp_path):
+    """The BM25 leg must cut postings down to the query terms BEFORE
+    any term-keyed work (the round-1 scale fix): the persisted postings
+    scan carries the batch's term filter, and no aggregate keyed on
+    ``term`` (a full-vocabulary rollup) appears in the plan. The
+    driver-built (term → query_id, qtf) map is a folded constant, not a
+    JSON string parsed per posting."""
+    import re
+
     from rag_database_spark.operators import bm25 as bm25_ops
     from rag_database_spark.workload import queries_df
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    postings = bm25_ops.build_postings(docs)
-    doclens = bm25_ops.build_doclens(docs)
+    bm25_ops.write_index(docs, str(tmp_path / "bm25"))
+    postings, doclens = bm25_ops.read_index(spark, str(tmp_path / "bm25"))
     scored = bm25_ops.score_queries(queries_df(spark), postings, doclens)
-    assert "BroadcastHashJoin" in plan_of(scored, "simple")
+    p = plan_of(scored)
+    scans = p.split("Scan parquet")[1:]
+    postings_scans = [s for s in scans if "bm25/postings" in s.split("\n\n")[0]]
+    assert len(postings_scans) == 1
+    assert "PushedFilters: [In(term, [" in postings_scans[0].split("\n\n")[0]
+    assert not re.search(r"Keys \[\d+\]: \[term#", p)
+    assert "from_json" not in p
 
 
 def test_dup_ngram_rollup_partial_aggregates(spark):

@@ -4,7 +4,11 @@ eager/effectful entries rebuild every call; a session swap invalidates."""
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import __spark_entry__ as entrymod
+from rag_database_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,22 +32,27 @@ def test_eager_entry_not_cached(spark):
 
 
 def test_checkpoint_bearing_entries_rebuild_per_call(spark):
-    """r18 gate fix (r17 VERDICT item 1): entries listed in _PURE_LAZY
-    whose builders eager-localCheckpoint a subtree must NOT be served
-    from _PREPARED — the cached frame would hand every later invocation
-    the warmup-materialized RDD blocks (result caching across bench
-    passes). One representative per affected family: bm25_topk (bm25
-    qterms/stats/postings folds), rerank_topk (lexical_overlap_rerank
-    candidate fold), maxsim_topk (multi-vector patch-table fold)."""
+    """Entries whose builders eager-localCheckpoint a subtree must NOT
+    be served from _PREPARED — the cached frame would hand every later
+    invocation the warmup-materialized RDD blocks (result caching
+    across bench passes). Representatives are chosen by plan shape:
+    maxsim_topk reads the page multi-vector table that
+    ``workload.multivector_pages`` checkpoints. Conversely, a pure-lazy
+    entry (bm25_topk) is served from _PREPARED."""
     qs = entrymod.queries()
-    for name in ("bm25_topk", "rerank_topk", "maxsim_topk"):
-        a = qs[name](spark, SF_DIR)
-        b = qs[name](spark, SF_DIR)
-        assert a is not b, name
-        # the guard fires on the plan shape, not the name list
-        assert entrymod._has_materialized_leaf(a), name
-        key = (name, entrymod._source_fingerprint(SF_DIR))
-        assert key not in entrymod._PREPARED, name
+    fp = entrymod._source_fingerprint(SF_DIR)
+    a = qs["maxsim_topk"](spark, SF_DIR)
+    b = qs["maxsim_topk"](spark, SF_DIR)
+    assert a is not b
+    # the guard fires on the plan shape, not the name list
+    assert entrymod._has_materialized_leaf(a)
+    assert ("maxsim_topk", fp) not in entrymod._PREPARED
+
+    a = qs["bm25_topk"](spark, SF_DIR)
+    b = qs["bm25_topk"](spark, SF_DIR)
+    assert a is b
+    assert not entrymod._has_materialized_leaf(a)
+    assert entrymod._PREPARED[("bm25_topk", fp)][1] is a
 
 
 def test_prepared_cache_serves_only_pure_lazy_plans(spark):
@@ -101,3 +110,36 @@ def test_curation_cache_stale_session_invalidates(spark):
     rebuilt = entrymod._curation_artifact(spark, SF_DIR)
     assert rebuilt is not art
     assert entrymod._CURATION_CACHE[fp][0] is spark
+
+
+def test_half_written_bm25_index_rebuilds(spark, monkeypatch):
+    """``bm25.write_index`` writes postings, then doclens: a kill between
+    the two leaves postings/_SUCCESS beside incomplete doclens. The
+    index probe must treat that directory as unbuilt and rebuild it."""
+    key = "half-written-index-test"
+    monkeypatch.setattr(entrymod, "_bm25_index_key", lambda sf_dir: key)
+    cache_dir = (
+        Path(entrymod.__file__).resolve().parent / ".cache" / "bm25_index" / key
+    )
+    writes = []
+    write_index = entrymod.bm25_ops.write_index
+
+    def counted(*args, **kwargs):
+        writes.append(args[1])
+        write_index(*args, **kwargs)
+
+    monkeypatch.setattr(entrymod.bm25_ops, "write_index", counted)
+    shutil.rmtree(cache_dir, ignore_errors=True)
+    try:
+        entrymod._bm25_index(spark, SF_DIR)
+        assert len(writes) == 1
+        (cache_dir / "doclens" / "_SUCCESS").unlink()
+        entrymod._INDEX_CACHE.pop(key)
+        _, doclens = entrymod._bm25_index(spark, SF_DIR)
+        assert len(writes) == 2
+        assert (cache_dir / "doclens" / "_SUCCESS").exists()
+        n_docs = load_table(spark, SF_DIR, "documents").count()
+        assert doclens.count() == n_docs
+    finally:
+        entrymod._INDEX_CACHE.pop(key, None)
+        shutil.rmtree(cache_dir, ignore_errors=True)

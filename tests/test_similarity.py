@@ -140,6 +140,78 @@ def test_pruned_rescore_is_exact_on_candidates(spark, patch_corpus):
         assert s == pytest.approx(brute[k], rel=1e-12)
 
 
+def test_fused_maxsim_ties_split_across_arrow_batches(spark):
+    """The per-batch partial top-fetch must keep the global top-fetch
+    when a pooled-score tie straddles the fetch boundary, inside one
+    Arrow batch AND across batches. Pooled directions: group A beats B
+    beats C for every query. B's four pages are ``2**k`` × one patch
+    set: power-of-two scaling leaves the pooled cosine bit-identical (a
+    4-way tie) but scales MaxSim, so a wrong pick inside the tie shows.
+    Pages 0-2 (B, A, B) form one batch that must drop a tied B page,
+    pages 3-5 (B, B, C) the next. Reference: pooled top-fetch from
+    NumPy (rounded like the prefetch, ties by page_id), scored by the
+    brute-force ``maxsim_scores``."""
+    rng = np.random.default_rng(21)
+    fetch = 2
+
+    def patches(direction):
+        r = rng.normal(size=3).round(3) * 0.1
+        return np.array([np.add(direction, r), np.subtract(direction, r)])
+
+    a = patches([1.0, 0.0, 0.0])
+    b = patches([1.0, 0.5, 0.0])
+    c = patches([1.0, 1.5, 0.0])
+    layout = [(b, 1), (a, 1), (b, 2), (b, 4), (b, 8)] + [
+        (c, s) for s in (1, 2, 4, 8)
+    ]
+    pages = {pid: P * scale for pid, (P, scale) in enumerate(layout)}
+    base_q = np.array([[1.0, 0.1, 0.2], [1.0, -0.1, 0.0]])
+    queries = {
+        q: base_q + rng.normal(size=(2, 3)).round(3) * 0.05 for q in range(3)
+    }
+    qdf = spark.createDataFrame(
+        [(q, P.tolist()) for q, P in queries.items()],
+        "query_id long, patches array<array<double>>",
+    )
+    pdf = spark.createDataFrame(
+        [(pid, pages[pid].tolist()) for pid in sorted(pages)],
+        "page_id long, patches array<array<double>>",
+    ).coalesce(1)  # one partition in page_id order: batches 0-2, 3-5, 6-8
+
+    def unit(v):
+        return v / np.linalg.norm(v)
+
+    expected = set()
+    for q, Q in queries.items():
+        qv = unit(Q.mean(axis=0))
+        pooled = {
+            pid: round(float(qv @ unit(P.mean(axis=0))), 12)
+            for pid, P in pages.items()
+        }
+        order = sorted(pooled, key=lambda pid: (-pooled[pid], pid))
+        assert order[:3] == [1, 0, 2]  # A, then the B tie at the boundary
+        assert pooled[order[fetch - 1]] == pooled[order[fetch]]
+        expected |= {(q, pid) for pid in order[:fetch]}
+    brute = {
+        (r["query_id"], r["page_id"]): r["score"]
+        for r in maxsim_scores(qdf, pdf).collect()
+    }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = {
+            (r["query_id"], r["page_id"]): r["score"]
+            for r in maxsim_scores_pruned(qdf, pdf, fetch_k=fetch).collect()
+        }
+    finally:
+        spark.conf.set(key, old)
+    assert set(got) == expected
+    for k, v in got.items():
+        assert v == pytest.approx(brute[k], rel=1e-12)
+
+
 def test_near_dupes_brute_force(spark):
     a = [1.0, 0.0, 0.0]
     b = [0.9999, 0.01, 0.0]

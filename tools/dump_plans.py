@@ -124,6 +124,9 @@ HEADLINE = (
     # r13: retrieval evaluation — keyed relevance join + one ordered
     # cumsum window, nothing corpus-sized
     "ir_metrics",
+    # fused ColPali prefetch + rescore: one page scan, one query_id
+    # exchange shared by the prefetch and MaxSim rank windows
+    "maxsim_topk",
 )
 
 
